@@ -658,10 +658,11 @@ def _find_regressions(
 def main() -> None:
     finals_gate = _finals_load_gate()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from talkdesk_async_etl_spark.plans.registry import load_all
-    from talkdesk_async_etl_spark.session import build_session
+    from talkdesk_async_etl_spark.session import DEFAULT_CPUS, build_session
+
+    cpus = DEFAULT_CPUS
 
     spark = build_session(app_name="tde_bench", cpus=cpus)
     registry = load_all()

@@ -26,7 +26,10 @@ import time
 
 import duckdb
 
-OUT = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.tmp/sf1")
+OUT = os.environ.get(
+    "SPARK_GRAFT_SF1_DIR",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "sf1"),
+)
 SF = float(os.environ.get("SPARK_GRAFT_SF1_SCALE", "1.0"))
 
 N_CUSTOMER = int(150_000 * SF)

@@ -26,9 +26,10 @@ import resource
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.tmp/sf1")
+SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(ROOT, ".tmp", "sf1"))
 REPEATS = int(os.environ.get("SPARK_GRAFT_SF1_REPEATS", "3"))
 
 _DEFAULT_QUERIES = (
@@ -58,9 +59,9 @@ def main() -> None:
     if not os.path.exists(os.path.join(SF1, "lineitem.parquet")):
         sys.exit(f"fixture missing — run scripts/make_sf1.py first ({SF1})")
     from talkdesk_async_etl_spark.plans.registry import load_all
-    from talkdesk_async_etl_spark.session import build_session
+    from talkdesk_async_etl_spark.session import DEFAULT_CPUS, build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     spark = build_session(app_name="scale_rehearsal", cpus=cpus)
     reg = load_all()
     out = {}

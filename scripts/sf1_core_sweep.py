@@ -84,8 +84,7 @@ def main() -> None:
     from talkdesk_async_etl_spark.plans.registry import load_all
     from talkdesk_async_etl_spark.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(app_name="sf1_core_sweep", cpus=cpus)
+    spark = build_session(app_name="sf1_core_sweep")  # session.DEFAULT_CPUS
     registry = load_all()
     results: dict[str, dict] = {}
     for name in names:

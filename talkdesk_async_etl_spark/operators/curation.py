@@ -48,7 +48,7 @@ from talkdesk_async_etl_spark.plans.cache import (
     scoped_persist,
 )
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
+from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 # Stage constants are IMPORTED from the standalone operators, so the
@@ -447,11 +447,9 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit is 6 rows by construction, so collect_release frees
     every stage cache on the way out. Same size-derived conf window
     as pipeline_incremental_e2e: every post-scan stage relation is
-    survivor-/language-/pair-sized, so when the corpus fits one
-    partition the per-stage AQE re-planning is pure overhead (no-op
-    at cluster scale)."""
+    survivor-/language-/pair-sized, so the corpus count bounds them."""
     n_docs = t(spark, sf_dir, "documents").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_docs // 100_000 + 1)):
+    with single_partition_loop(spark, partitions_for(n_docs)):
         return collect_release(curation_audit_plan(spark, sf_dir))
 
 
@@ -564,11 +562,10 @@ def pipeline_entity_resolution_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     p = t(spark, sf_dir, "part", spread=True)
-    # Size-derived conf window (pipeline_incremental_e2e's rule; no-op
-    # at cluster scale): every stage past the scan is vocabulary- or
-    # block-pair-sized, so derive from the part table's metadata count.
+    # Every stage past the scan is vocabulary- or block-pair-sized, so
+    # the part table's metadata count sizes the conf window.
     n_recs = t(spark, sf_dir, "part").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_recs // 100_000 + 1)), cache_scope():
+    with single_partition_loop(spark, partitions_for(n_recs)), cache_scope():
         norm = scoped_persist(
             p.select(
                 "p_partkey",
@@ -1066,18 +1063,16 @@ def pipeline_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Like the fixpoint loops, the composed audit is ~30 SMALL stages
     (every post-landing relation is file-count-, source-count- or
-    pair-graph-sized); when the corpus itself fits one partition the
-    per-stage AQE re-planning across all of them is pure overhead, so
-    the same size-derived conf window applies — derived from the
-    parquet metadata row count, no-op at cluster scale
-    (session.single_partition_loop). The window covers construction
+    pair-graph-sized), so the size-derived conf window
+    (session.single_partition_loop) is sized from the corpus's
+    parquet metadata row count. The window covers construction
     too — construction executes the landing write, the shingle-pair
     build and the label loops eagerly, and an opening-after-
     construction variant measured WORSE (7.26 vs 5.79 s min-of-4:
     the pair build's lost parallelism at one partition costs less
     than the construction stages' AQE re-planning)."""
     n_docs = t(spark, sf_dir, "documents").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_docs // 100_000 + 1)):
+    with single_partition_loop(spark, partitions_for(n_docs)):
         with cache_scope():
             return collect_release(incremental_audit_plan(spark, sf_dir))
 
@@ -1495,8 +1490,8 @@ def pipeline_training_export_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the lazy core the plan test pins): the audit is 6 rows by
     construction, so collect_release frees every stage cache on the
     way out. Same size-derived conf window as
-    pipeline_incremental_e2e (no-op at cluster scale)."""
+    pipeline_incremental_e2e."""
     n_docs = t(spark, sf_dir, "documents").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_docs // 100_000 + 1)):
+    with single_partition_loop(spark, partitions_for(n_docs)):
         with cache_scope():
             return collect_release(training_export_audit_plan(spark, sf_dir))

@@ -1030,9 +1030,9 @@ def _cosine_pairs_blocked(emb: DataFrame) -> DataFrame:
     6-dp rounding stays in Spark so the rounding rule is the engine's
     own). Division semantics mirror the session's: under ANSI (the
     Spark 4 default, and what the join form does) a zero cosine
-    denominator fails the query; under non-ANSI the NaN/±inf results
-    flow through Spark's NaN-is-largest ``>=`` exactly like the join
-    form's."""
+    denominator fails the query; under non-ANSI it yields NULL, which
+    fails ``>=``, so the pair is dropped. NaN-valued inputs give a NaN
+    cosine, kept by Spark's NaN-is-largest ``>=`` like the join form."""
     import numpy as np
 
     spark = emb.sparkSession
@@ -1042,6 +1042,8 @@ def _cosine_pairs_blocked(emb: DataFrame) -> DataFrame:
         ansi = True
     tbl = emb.toArrow()
     ids = tbl.column("vec_id").to_numpy().astype(np.int64)
+    if len(ids) == 0:
+        return spark.createDataFrame([], "vec_a long, vec_b long, cos_sim double")
     mat = np.asarray(
         tbl.column("v").combine_chunks().flatten(), dtype=np.float64
     ).reshape(len(ids), -1)
@@ -1085,9 +1087,10 @@ def _cosine_pairs_blocked(emb: DataFrame) -> DataFrame:
                             "pair-join form's behavior)"
                         )
                     approx = (A @ b_mat.T) / denom
-                    cand = upper & (
-                        (approx >= _COSINE_THRESHOLD - 1e-9)
-                        | np.isnan(approx)
+                    cand = (
+                        upper
+                        & (denom != 0.0)
+                        & ((approx >= _COSINE_THRESHOLD - 1e-9) | np.isnan(approx))
                     )
                 ai, bj = np.nonzero(cand)
                 if not len(ai):

@@ -31,7 +31,7 @@ from talkdesk_async_etl_spark.plans.cache import (
     scoped_persist,
 )
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
+from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 _COMPONENTS_ORACLE = f"""
@@ -65,15 +65,8 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     hold an active cache_scope (the pairs persist registered here is
     released by the caller's scope exit)."""
     pairs = scoped_persist(pairs.select("doc_a", "doc_b"))
-    # The iteration works on the PAIRS graph, which is orders of
-    # magnitude smaller than the corpus — partition for its size,
-    # not the session default (32 shuffle partitions over a few
-    # hundred label rows makes every round
-    # scheduling-overhead-dominated).
-    n_parts = max(1, pairs.count() // 100_000 + 1)
-    # Same size-derived rule, applied to the round exchanges: when the
-    # graph fits one partition, AQE re-planning per round is pure
-    # overhead (session.single_partition_loop; no-op when n_parts > 1).
+    # The iteration works on the PAIRS graph, not the corpus.
+    n_parts = partitions_for(pairs.count())
     with single_partition_loop(pairs.sparkSession, n_parts):
         edges = scoped_persist(
             pairs.union(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
@@ -497,10 +490,7 @@ def components_large_small_star(pairs: DataFrame) -> DataFrame:
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
     nodes = scoped_persist(sym.select(F.col("u").alias("doc_id")).distinct())
-    n_parts = max(1, nodes.count() // 100_000 + 1)
-    # Size-derived round-exchange rule (see session.single_partition_loop):
-    # a single-partition contraction round has nothing for AQE to
-    # coalesce/skew-split; no-op when the graph spans real partitions.
+    n_parts = partitions_for(nodes.count())
     with single_partition_loop(pairs.sparkSession, n_parts):
         return _star_rounds(pairs, sym, nodes, n_parts)
 

@@ -42,7 +42,7 @@ from talkdesk_async_etl_spark.plans.cache import (
     scoped_persist,
 )
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
+from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 _PR_DAMPING = 0.85
@@ -73,8 +73,9 @@ def _edge_window(und):
     exchange, no AQE re-plan. The count doubles as the persist
     materializer the callers rely on."""
     n_edges = und.count()
-    if 2 * n_edges >= 100_000:
-        return single_partition_loop(und.sparkSession, 2)  # no-op window
+    n_parts = partitions_for(2 * n_edges)
+    if n_parts > 1:
+        return single_partition_loop(und.sparkSession, n_parts)  # no-op window
     from collections import Counter
 
     deg: Counter = Counter()
@@ -82,9 +83,7 @@ def _edge_window(und):
         deg[row[0]] += 1
         deg[row[1]] += 1
     wedge_bound = sum(d * d for d in deg.values())
-    return single_partition_loop(
-        und.sparkSession, max(1, wedge_bound // 100_000 + 1)
-    )
+    return single_partition_loop(und.sparkSession, partitions_for(wedge_bound))
 
 _PR_ITERS = 8
 _PR_CHECKPOINT_EVERY = 2  # measured best of {1, 2, 4} at sf0.1
@@ -168,8 +167,7 @@ def pagerank_from_edges(
     # Normalize once: each edge carries its transition probability,
     # so the iteration never re-joins out-weights.
     outw = edges_raw.groupBy("src").agg(F.sum("w").alias("ow"))
-    n_edges = edges_raw.count()
-    n_parts = max(1, n_edges // 100_000 + 1)
+    n_parts = partitions_for(edges_raw.count())
     edges = scoped_persist(
         edges_raw.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("ow")).alias("p"))
@@ -191,8 +189,6 @@ def pagerank_from_edges(
     def j(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df.repartition(n_parts, df.columns[0])
 
-    # Size-derived round-exchange rule (session.single_partition_loop):
-    # no-op when the edge graph spans real partitions.
     with single_partition_loop(edges_raw.sparkSession, n_parts):
         ranks = nodes.select(
             "node", F.lit(1.0 / n_nodes).alias("pr")
@@ -471,16 +467,12 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        # Graph-sized partitioning, same reasoning as pagerank_from_edges
-        # and propagate_min_labels: the iteration works on the EDGE
-        # graph, orders of magnitude smaller than the corpus that built
-        # it — session-default 32-partition exchanges over a few hundred
-        # edges make every round scheduling-dominated (measured 3.2 s →
-        # ~1 s at sf0.1 for the identical rounds).
+        # Graph-sized partitioning: measured 3.2 s → ~1 s at sf0.1 over
+        # session-default exchanges for the identical rounds.
         edges_wide = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
             und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
-        n_parts = max(1, edges_wide.count() // 100_000 + 1)
+        n_parts = partitions_for(edges_wide.count())
         edges = scoped_persist(edges_wide.repartition(n_parts, "src"))
         # Bounded driver fetch: the single source id.
         src0 = edges.agg(F.min("src").alias("m")).collect()[0]["m"]
@@ -490,7 +482,6 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         frontier = dist
-        # Size-derived round-exchange rule (session.single_partition_loop).
         with single_partition_loop(spark, n_parts):
             for rnd in range(1, _BFS_MAX_ROUNDS + 1):
                 # The frontier is node-sized — broadcast it onto the
@@ -607,14 +598,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.crossJoin(F.broadcast(totals))
         .filter(F.col("w") * F.col("n_pairs") > F.col("total_w"))
         .select("a", "b")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
+    # The lazy checkpoint + count fuse the edge build and each peel
+    # round into ONE job apiece: count materializes the checkpoint AND
+    # sizes the window (or probes convergence).
     n_edges = edges.count()
-    # Size-derived round-exchange rule (session.single_partition_loop);
-    # the lazy checkpoint + count fuse each peel round into ONE job
-    # (the propagate_min_labels pattern: count materializes the
-    # checkpointed round AND probes convergence).
-    with single_partition_loop(spark, max(1, n_edges // 100_000 + 1)):
+    with single_partition_loop(spark, partitions_for(n_edges)):
         for _ in range(_KCORE_MAX_ROUNDS):
             deg = (
                 edges.select(F.col("a").alias("node"))
@@ -1246,8 +1236,7 @@ def hits_from_edges(edges_raw: DataFrame, iters: int = _HITS_ITERS) -> DataFrame
     plans as sort-merge even for a 25-node graph (measured ~+0.8 s
     over the 4 rounds at sf0.1). Lineage cut per round via
     localCheckpoint (the pagerank 2.4x lesson)."""
-    n_edges = edges_raw.count()
-    n_parts = max(1, n_edges // 100_000 + 1)
+    n_parts = partitions_for(edges_raw.count())
     edges = scoped_persist(edges_raw.repartition(n_parts, "src"))
     nodes = scoped_persist(
         edges.select(F.col("src").alias("node"))
@@ -1281,8 +1270,7 @@ def hits_from_edges(edges_raw: DataFrame, iters: int = _HITS_ITERS) -> DataFrame
         )
         return res.localCheckpoint() if checkpoint else res
 
-    # Size-derived round-exchange rule (session.single_partition_loop) +
-    # the pagerank checkpoint cadence: lineage is cut once per FULL
+    # The pagerank checkpoint cadence: lineage is cut once per FULL
     # hub/auth round (the half-round auth relation stays lazy inside
     # its round — its one-join subtree re-derives from the checkpointed
     # hub, which is cheaper than an extra eager materialization per

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from talkdesk_async_etl_spark.plans.cache import cache_scope, collect_release, scoped_persist
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
+from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 _N_QUERIES = 5  # query set: vec_id < 5
@@ -750,11 +750,8 @@ def pq_train_codebooks(emb: DataFrame) -> list[list[list[float]]]:
         ).alias("s", "subv"),
     )
     # The count materializes the caller's emb persist under the normal
-    # AQE profile and sizes the round-exchange window: each Lloyd round
-    # is one scan + one S·K·DS-cell aggregate, nothing for AQE to
-    # re-plan when the corpus fits one partition (no-op at scale —
-    # session.single_partition_loop).
-    n_parts = max(1, emb.count() // 100_000 + 1)
+    # AQE profile, before the window opens.
+    n_parts = partitions_for(emb.count())
     seed = emb.orderBy("vec_id").limit(_PQ_K).select("v").collect()
     cb = [
         [list(r["v"])[s * _PQ_DS : (s + 1) * _PQ_DS] for r in seed]
@@ -1031,7 +1028,7 @@ def sim_ivfpq_recall_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule (no-op at cluster scale), sized from the embeddings metadata
     count."""
     n_vecs = t(spark, sf_dir, "embeddings").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_vecs // 100_000 + 1)), cache_scope():
+    with single_partition_loop(spark, partitions_for(n_vecs)), cache_scope():
         exact = sim_topk_cosine(spark, sf_dir).select("q_id", "neighbor_id")
         approx = (
             sim_topk_ivfpq(spark, sf_dir)

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from talkdesk_async_etl_spark.plans.cache import cache_scope, scoped_persist
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
+from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 # Tiny per-language marker lexicons for the n-gram/keyword language-ID
@@ -778,18 +778,11 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n_docs = t(spark, sf_dir, "documents").count()  # parquet metadata count
+    # Cache sizing for the persisted corpus: a 500k-docs/partition byte
+    # heuristic, deliberately NOT the window signal below (ADVICE r15).
     n_parts = max(1, n_docs // 500_000)
     learned: list[tuple[int, str, str, int]] = []
-    # Size-derived round-exchange rule (session.single_partition_loop):
-    # when the encoded corpus fits one partition the per-round AQE
-    # re-planning over the single pair-count exchange is pure overhead;
-    # no-op at scale. The window signal uses the same ~100k-row
-    # fits-one-partition threshold as every other call site — NOT the
-    # 500k-docs/partition cache-sizing rule above, which is a byte
-    # heuristic 10x looser than the window's contract (ADVICE r15).
-    with single_partition_loop(
-        d.sparkSession, max(1, n_docs // 100_000 + 1)
-    ), cache_scope():
+    with single_partition_loop(d.sparkSession, partitions_for(n_docs)), cache_scope():
         base = scoped_persist(
             d.select(base_expr.alias("e"))
             .filter(F.col("e") != "")

@@ -23,7 +23,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def build_session(
@@ -99,12 +101,37 @@ _window_owner: int | None = None
 _window_depth = 0
 
 
+# Rows per partition for the relations iterative operators persist and
+# loop over; the one place the engine's partition-sizing rule lives.
+_ROWS_PER_PARTITION = 100_000
+
+
+def partitions_for(rows: int) -> int:
+    """Partition count for a relation of ``rows`` rows:
+    ``rows // 100_000 + 1``, at least one.
+
+    The iterative operators size their persisted round relations with
+    it (``repartition(partitions_for(n), key)``) instead of the
+    core-count session default — dozens of exchange partitions over a
+    few hundred edges make every fixpoint round scheduling-dominated. The
+    same count is the signal ``single_partition_loop`` takes: under
+    100k rows the relation fits one partition and the loop runs in the
+    AQE-off window.
+    """
+    return max(1, rows // _ROWS_PER_PARTITION + 1)
+
+
 @contextmanager
 def single_partition_loop(spark: SparkSession, n_parts: int):
     """Execution-conf window for fixpoint loops whose per-round
-    relations fit ONE partition (``n_parts == 1`` — the same
-    graph-size-derived partition count the iterative operators already
-    use to size their persisted relations, never a core-count rule).
+    relations fit ONE partition (``n_parts == 1``).
+
+    The contract is on the partition count of the loop's relation, not
+    on how it was derived: usually ``partitions_for(rows)`` of the
+    loop's size signal, but a relation that is already materialized may
+    pass its own ``rdd.getNumPartitions()`` (no job), and an operator
+    with its own sizing rule may pass that count. Never a core-count
+    rule.
 
     Inside the window AQE is disabled and ``shuffle.partitions`` is
     pinned to 1: a single-partition loop round has nothing for AQE to
@@ -113,7 +140,7 @@ def single_partition_loop(spark: SparkSession, n_parts: int):
     0.28 s → 0.16 s per label-propagation round on the sf0.1 dup-pair
     graph (256 pairs), ~30-35% off whole fixpoint loops (guide §1.2
     step 2: per-task/scheduling work, after the algorithm shape).
-    On a real graph (n_parts > 1, i.e. ≥100k edges) the window is a
+    On a real graph (n_parts > 1, i.e. ≥100k rows) the window is a
     NO-OP and AQE keeps its runtime re-planning — the toggle derives
     from data size, so cluster-scale behavior is unchanged.
 

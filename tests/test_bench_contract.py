@@ -31,13 +31,14 @@ import sys
 from pathlib import Path
 
 _SUBSET = "agg_conditional_sum,filter_limit1,scalar_math"
-_REPO_DETAIL = Path("/root/repo/bench_detail.json")
+_ROOT = Path(__file__).resolve().parent.parent
+_REPO_DETAIL = _ROOT / "bench_detail.json"
 
 
 def test_bench_emits_parseable_summary_last(tmp_path):
     detail_path = tmp_path / "bench_detail.json"
     repo_detail_before = _REPO_DETAIL.read_bytes() if _REPO_DETAIL.exists() else None
-    stamped_before = sorted(Path("/root/repo").glob("bench_detail_r*.json"))
+    stamped_before = sorted(_ROOT.glob("bench_detail_r*.json"))
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -51,7 +52,7 @@ def test_bench_emits_parseable_summary_last(tmp_path):
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo",
+        cwd=_ROOT,
         env=env,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -93,7 +94,7 @@ def test_bench_emits_parseable_summary_last(tmp_path):
     assert repo_detail_after == repo_detail_before, (
         "subprocess bench run must not clobber the repo-root bench_detail.json"
     )
-    assert sorted(Path("/root/repo").glob("bench_detail_r*.json")) == stamped_before
+    assert sorted(_ROOT.glob("bench_detail_r*.json")) == stamped_before
 
 
 def test_headline_ids_are_registered_queries():

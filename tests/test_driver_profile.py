@@ -14,6 +14,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+_ROOT = Path(__file__).resolve().parent.parent
 
 _SCRIPT = r"""
 import sys
@@ -57,7 +60,7 @@ def test_all_query_families_run_under_vanilla_session():
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo",
+        cwd=_ROOT,
     )
     assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-2000:]}"
 
@@ -203,7 +206,7 @@ def test_survey_section2_is_the_registry():
 
     from talkdesk_async_etl_spark.plans.registry import load_all
 
-    lines = open("/root/repo/SURVEY.md").read().splitlines()
+    lines = (_ROOT / "SURVEY.md").read_text().splitlines()
     start = next(i for i, l in enumerate(lines) if l.startswith("## 2. Operator inventory"))
     end = next(i for i, l in enumerate(lines) if l.startswith("## 3."))
     section = lines[start:end]

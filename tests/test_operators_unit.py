@@ -239,9 +239,10 @@ def test_embedding_cosine_block_kernel_bitwise_equals_join_form(spark):
     replays the ``aggregate(zip_with(...))`` float sequence exactly
     (same op order, no reassociation, no FMA), so equality is exact,
     not approximate. Covers the fixture corpus plus a constructed
-    frame with a zero-norm vector (NaN sim — kept by BOTH forms under
-    Spark's NaN-is-largest ``>=`` semantics) and an orthogonal pair
-    (dropped by both)."""
+    frame with an orthogonal pair (dropped by both), a zero-norm vector
+    under ANSI (both fail) and non-ANSI division (both drop the pair),
+    a NaN-valued vector (NaN sim kept by both under Spark's
+    NaN-is-largest ``>=``) and an empty frame."""
     import struct
 
     from talkdesk_async_etl_spark.operators.dedup import (
@@ -299,6 +300,30 @@ def test_embedding_cosine_block_kernel_bitwise_equals_join_form(spark):
                 _cosine_pairs_joined(degen).collect()
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
             _cosine_pairs_blocked(degen).collect()
+    # Non-ANSI: the zero denominator is NULL in the join form and NULL
+    # fails ``>=``, so both forms drop the pair; a NaN-valued input
+    # still gives a NaN cosine that both keep.
+    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        degen = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [float("nan"), 0.0])],
+            "vec_id long, v array<double>",
+        )
+        with cache_scope():
+            j = canon(_cosine_pairs_joined(degen).collect())
+            b = canon(_cosine_pairs_blocked(degen).collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
+    assert [(x, y) for x, y, _ in j] == [(0, 2), (1, 2)]
+    assert b == j
+    # Empty input: no pairs from either form, same columns.
+    empty = spark.createDataFrame([], "vec_id long, v array<double>")
+    with cache_scope():
+        j = _cosine_pairs_joined(empty)
+        b = _cosine_pairs_blocked(empty)
+        assert b.collect() == j.collect() == []
+    assert b.columns == j.columns
 
 
 def test_shingles_short_docs_yield_empty(spark):

@@ -618,10 +618,11 @@ def test_single_partition_loop_window_semantics(spark):
     window must (1) pin AQE off + shuffle.partitions=1 inside exactly
     when the caller's size signal says one partition, (2) be a NO-OP
     when the relation spans real partitions (cluster-scale safety),
-    and (3) restore both confs on exit even when the body raises."""
+    and (3) restore both confs on exit even when the body raises. The
+    size signal is ``partitions_for``: one partition below 100k rows."""
     import pytest
 
-    from talkdesk_async_etl_spark.session import single_partition_loop
+    from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     parts0 = spark.conf.get("spark.sql.shuffle.partitions")
@@ -633,6 +634,15 @@ def test_single_partition_loop_window_semantics(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
 
     with single_partition_loop(spark, 2):  # real graph -> no-op
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
+
+    # The policy boundary: the window opens below 100k rows only.
+    assert [partitions_for(n) for n in (0, 99_999, 100_000, 250_000)] == [1, 1, 2, 3]
+    with single_partition_loop(spark, partitions_for(99_999)):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    with single_partition_loop(spark, partitions_for(100_000)):
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
         assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
 
