@@ -53,12 +53,10 @@ from talkdesk_async_etl_spark.sources.io import read_table as t
 
 # Stage constants are IMPORTED from the standalone operators, so the
 # composed pipeline can never drift from the attested cores.
-from talkdesk_async_etl_spark.operators.dedup import _shingle_hashes
+from talkdesk_async_etl_spark.operators.dedup import JACCARD_MIN, near_jaccard_pairs
 from talkdesk_async_etl_spark.operators.sampling import _TEMP_ALPHA, _TEMP_ALPHA_F, _TEMP_MICRO
 from talkdesk_async_etl_spark.operators.text import _PACK_BUDGET, _PACK_SHARDS
 from talkdesk_async_etl_spark.operators.text_quality import _DECON_MOD, _DECON_N
-
-_JACC_T = "0.6"  # near-dup Jaccard threshold (dedup_near_jaccard's)
 
 _CURATION_ORACLE = f"""
     WITH RECURSIVE base AS MATERIALIZED (
@@ -92,7 +90,7 @@ _CURATION_ORACLE = f"""
         ) p
         JOIN cnt ca ON ca.doc_id = p.doc_a
         JOIN cnt cb ON cb.doc_id = p.doc_b
-        WHERE c * 1.0 / (ca.n + cb.n - c) >= {_JACC_T}
+        WHERE c * 1.0 / (ca.n + cb.n - c) >= {JACCARD_MIN}
     ),
     s3 AS MATERIALIZED (
         SELECT * FROM s2 WHERE doc_id NOT IN (SELECT doc_b FROM near_drop)
@@ -289,26 +287,12 @@ def curation_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("m")
     )
 
-    # stage 3: near dedup — 3-shingle Jaccard >= 0.6, larger id drops
-    sh = scoped_persist(
-        s2.select(
-            "doc_id", _shingle_hashes(F.col("text")).alias("shs")
-        ).select("doc_id", F.size("shs").alias("n"), F.explode("shs").alias("h"))
+    # stage 3: near dedup — the larger id of each near-Jaccard pair drops
+    near_drop = (
+        near_jaccard_pairs(s2.select("doc_id", "text"))
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
     )
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count("*").alias("c"))
-    )
-    near_drop = pairs.filter(
-        F.col("c") / (F.col("na") + F.col("nb") - F.col("c")) >= float(_JACC_T)
-    ).select(F.col("doc_b").alias("doc_id")).distinct()
     s3 = scoped_persist(s2.join(near_drop, "doc_id", "left_anti"))
 
     # stage 4: decontamination — eval slice + any 4-gram overlap drops
@@ -716,7 +700,7 @@ def _inc_oracle() -> str:
         FROM common
         JOIN cnt ca ON ca.doc_id = doc_a
         JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.6
+        WHERE c * 1.0 / (ca.n + cb.n - c) >= {JACCARD_MIN}
     ),
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM jpairs
@@ -816,7 +800,6 @@ def incremental_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     live SURVIVORS only; every audit aggregate reads a persisted
     parent. Output is 5 rows by construction — the registered wrapper
     collect_releases every stage cache."""
-    from talkdesk_async_etl_spark.operators.dedup import near_jaccard_pairs
     from talkdesk_async_etl_spark.operators.dedup_clusters import (
         incremental_components_from,
     )

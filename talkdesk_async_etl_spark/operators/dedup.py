@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from talkdesk_async_etl_spark.plans.cache import (
     cache_scope,
     collect_release,
+    scoped_broadcast,
     scoped_persist,
 )
 from talkdesk_async_etl_spark.plans.registry import query
@@ -267,7 +268,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JACCARD_CTES = """
+# The near-dup threshold of every exact-Jaccard relation: the Spark
+# pair builders, the verifier and every DuckDB oracle read it here.
+JACCARD_MIN = 0.6
+
+_JACCARD_CTES = f"""
     toks AS (
         SELECT doc_id, string_split(text, ' ') AS tk FROM documents
     ),
@@ -288,7 +293,7 @@ _JACCARD_CTES = """
         FROM common
         JOIN cnt ca ON ca.doc_id = doc_a
         JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.6
+        WHERE c * 1.0 / (ca.n + cb.n - c) >= {JACCARD_MIN}
     )
 """
 
@@ -326,13 +331,13 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_jaccard_pairs(docs)
 
 
-def near_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """The 3-shingle exact-Jaccard pair build behind
-    :func:`dedup_near_jaccard`, over any ``(doc_id, text)`` frame —
-    factored out so composed pipelines (pipeline_incremental_e2e's
-    cluster-maintenance stage) reuse the attested semantics instead of
-    copying them. Caller must hold an active cache_scope (the shingle
-    persist registered here is released by the caller's scope exit)."""
+def shingle_overlaps(docs: DataFrame) -> DataFrame:
+    """Every doc pair sharing a 3-shingle, over any ``(doc_id, text)``
+    frame: ``(doc_a, doc_b, na, nb, c)`` with doc_a < doc_b, the two
+    shingle-set sizes and the shared-shingle count — the exhaustive
+    exact overlap that the Jaccard and containment relations filter.
+    Caller must hold an active cache_scope (the shingle persist
+    registered here is released by the caller's scope exit)."""
     shingled = docs.select("doc_id", _shingle_hashes(F.col("text")).alias("shs"))
     # Persist (scoped): both self-join sides read this; without it the
     # whole shingle pipeline is recomputed per side. (At 100 TB this is
@@ -341,7 +346,7 @@ def near_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
         shingled.select("doc_id", F.size("shs").alias("n"), F.explode("shs").alias("h"))
     )
     a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
+    return (
         a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
@@ -351,9 +356,54 @@ def near_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
         )
         .agg(F.count("*").alias("c"))
     )
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return pairs.filter(jac >= threshold).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
+
+
+def _jaccard():
+    """c / (na + nb − c) over ``(na, nb, c)`` columns of distinct sets —
+    NULL, not an ANSI DIVIDE_BY_ZERO, when both sets are empty (docs
+    shorter than 3 tokens share the all-max MinHash signature, so LSH
+    pairs them as candidates)."""
+    union = F.col("na") + F.col("nb") - F.col("c")
+    return F.when(union > 0, F.col("c") / union)
+
+
+def _keep_jaccard(overlaps: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)`` for the ``(doc_a, doc_b, na, nb, c)``
+    rows at Jaccard >= JACCARD_MIN, the ratio rounded to 6 dp."""
+    return overlaps.filter(_jaccard() >= JACCARD_MIN).select(
+        "doc_a", "doc_b", F.round(_jaccard(), 6).alias("jaccard")
+    )
+
+
+def near_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """The 3-shingle exact-Jaccard pair build behind
+    :func:`dedup_near_jaccard`, over any ``(doc_id, text)`` frame —
+    factored out so composed pipelines (curation's near-dedup stage,
+    pipeline_incremental_e2e's cluster-maintenance stage) reuse the
+    attested semantics instead of copying them. Caller must hold an
+    active cache_scope (see :func:`shingle_overlaps`)."""
+    return _keep_jaccard(shingle_overlaps(docs))
+
+
+def verify_jaccard(candidates: DataFrame, sets: DataFrame) -> DataFrame:
+    """Exact verification of ``(doc_a, doc_b)`` candidate pairs against
+    ``(doc_id, hs)`` distinct shingle-hash sets: the pairs at Jaccard
+    >= JACCARD_MIN as ``(doc_a, doc_b, jaccard)`` — the one verifier
+    behind every candidate generator (MinHash-LSH bands, prefix
+    filter, incremental LSH). Two candidate-sized lookups; the shared
+    count is ``size(array_intersect)`` since both arrays are distinct."""
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
+    return _keep_jaccard(
+        candidates.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size("hs_a").alias("na"),
+            F.size("hs_b").alias("nb"),
+            F.size(F.array_intersect("hs_a", "hs_b")).alias("c"),
+        )
     )
 
 
@@ -368,36 +418,19 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quote/aggregation/expansion pairs. Both ratios are emitted (exact
     integer ratios, 6-dp rounded) so the asymmetry is visible per pair.
 
-    Scale shape: identical to dedup_near_jaccard — the same persisted
-    shingle relation, the same 8-byte-hash self-join, one extra
-    ``least()`` in the post-aggregation filter; at corpus scale the
-    candidate generation swaps to the banded LSH path unchanged
-    (containment-style LSH wants per-doc signature NORMALIZATION by
-    min-size, which the verification step here already provides)."""
-    docs = t(spark, sf_dir, "documents", spread=True).select(
-        "doc_id", _shingle_hashes(F.col("text")).alias("shs")
-    )
-    sh = scoped_persist(
-        docs.select("doc_id", F.size("shs").alias("n"), F.explode("shs").alias("h"))
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count("*").alias("c"))
-    )
+    Scale shape: identical to dedup_near_jaccard — the same
+    :func:`shingle_overlaps` relation, one extra ``least()`` in the
+    post-aggregation filter; at corpus scale the candidate generation
+    swaps to the banded LSH path unchanged (containment-style LSH
+    wants per-doc signature NORMALIZATION by min-size, which the
+    verification step here already provides)."""
+    docs = t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     cont = F.col("c") / F.least("na", "nb")
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return pairs.filter(cont >= 0.7).select(
+    return shingle_overlaps(docs).filter(cont >= 0.7).select(
         "doc_a",
         "doc_b",
         F.round(cont, 6).alias("containment"),
-        F.round(jac, 6).alias("jaccard"),
+        F.round(_jaccard(), 6).alias("jaccard"),
     )
 
 
@@ -652,18 +685,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = _bucket_pairs(
         signed.select("doc_id", F.explode(band_keys).alias("band_key")), "band_key"
     ).distinct()
-    # Exact verification on candidates only (hash-set Jaccard).
-    sa = signed.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
-    sb = signed.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    union = F.size(F.array_union("hs_a", "hs_b"))
-    jac = inter / union
-    return (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= 0.6)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return verify_jaccard(candidates, signed)
 
 
 @query(
@@ -1032,7 +1054,10 @@ def _cosine_pairs_blocked(emb: DataFrame) -> DataFrame:
     Spark 4 default, and what the join form does) a zero cosine
     denominator fails the query; under non-ANSI it yields NULL, which
     fails ``>=``, so the pair is dropped. NaN-valued inputs give a NaN
-    cosine, kept by Spark's NaN-is-largest ``>=`` like the join form."""
+    cosine, kept by Spark's NaN-is-largest ``>=`` like the join form.
+    Input that is not one matrix — a NULL vector, a NULL element, or
+    vectors of different lengths — runs the join form, whose NULL
+    propagation drops exactly the pairs those vectors are in."""
     import numpy as np
 
     spark = emb.sparkSession
@@ -1044,10 +1069,13 @@ def _cosine_pairs_blocked(emb: DataFrame) -> DataFrame:
     ids = tbl.column("vec_id").to_numpy().astype(np.int64)
     if len(ids) == 0:
         return spark.createDataFrame([], "vec_a long, vec_b long, cos_sim double")
-    mat = np.asarray(
-        tbl.column("v").combine_chunks().flatten(), dtype=np.float64
-    ).reshape(len(ids), -1)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    v = tbl.column("v").combine_chunks()
+    flat = v.flatten()
+    dims = np.diff(v.offsets.to_numpy())
+    if v.null_count or flat.null_count or dims.min() != dims.max():
+        return _cosine_pairs_joined(emb)
+    mat = np.asarray(flat, dtype=np.float64).reshape(len(ids), -1)
+    bc = scoped_broadcast(spark, (ids, mat))
 
     def blocks(batches):
         _single_threaded_blas()  # BEFORE the worker's numpy import
@@ -1224,11 +1252,11 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing quadratic in the corpus."""
     docs = scoped_persist(
         t(spark, sf_dir, "documents", spread=True).select(
-            "doc_id", _shingle_hashes(F.col("text")).alias("shs")
+            "doc_id", _shingle_hashes(F.col("text")).alias("hs")
         )
     )
     full = docs.select(
-        "doc_id", F.size("shs").alias("n"), F.explode("shs").alias("h")
+        "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
     )
     freq = full.groupBy("h").agg(F.count(F.lit(1)).alias("f"))
     w = Window.partitionBy("doc_id").orderBy("f", "h")
@@ -1242,6 +1270,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture only 0.2% of prefix rows are corpus-unique so the local
     # win is nil; on a rare-token-heavy real corpus the prefix is
     # MOSTLY f=1 tokens and this is the standard ppjoin shrink.
+    # (3n+4) div 5 is ⌈JACCARD_MIN·n⌉ in integers: rewrite it if the
+    # constant changes.
     prefix = (
         full.join(freq, "h")
         .withColumn("rn", F.row_number().over(w))
@@ -1249,20 +1279,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("f") >= 2)
         .select("doc_id", "h")
     )
-    cand = _bucket_pairs(prefix, "h").distinct()
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("sa"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("sb"))
-    verified = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("c", F.size(F.array_intersect("sa", "sb")))
-        .withColumn("na", F.size("sa"))
-        .withColumn("nb", F.size("sb"))
-    )
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return verified.filter(jac >= 0.6).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    )
+    return verify_jaccard(_bucket_pairs(prefix, "h").distinct(), docs)
 
 
 # --- round-15 wave F: edit-distance verification ---------------------

@@ -21,10 +21,12 @@ from talkdesk_async_etl_spark.operators.dedup import (
     _JACCARD_CTES,
     _MINHASH_PERMS,
     _band_keys_expr,
+    _keep_jaccard,
     _minhash_sig_expr,
     _shingle_hashes,
     dedup_embedding_cosine,
     dedup_near_jaccard,
+    verify_jaccard,
 )
 from talkdesk_async_etl_spark.plans.cache import (
     cache_scope,
@@ -231,7 +233,11 @@ def dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     band the new batch, probe the corpus's banded signatures, gate
     pair emission on the bucket holding a new doc — its equality with
     this exact operator is driver-attested by
-    ``dedup_incremental_lsh_ok``."""
+    ``dedup_incremental_lsh_ok``.
+
+    The probe join is its own, not dedup.shingle_overlaps: the new-side
+    restriction and the emit-once rule would make that shared core
+    branch on its caller. The ratio and the threshold are shared."""
     docs = t(spark, sf_dir, "documents", spread=True).select(
         "doc_id", _shingle_hashes(F.col("text")).alias("shs")
     )
@@ -268,8 +274,7 @@ def dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count("*").alias("c"))
     )
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return pairs.filter(jac >= 0.6).select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    return _keep_jaccard(pairs)
 
 
 def incremental_lsh_pairs_for(docs: DataFrame) -> DataFrame:
@@ -325,15 +330,7 @@ def incremental_lsh_pairs_for(docs: DataFrame) -> DataFrame:
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
-    sa = signed.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
-    sb = signed.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
-    jac = F.size(F.array_intersect("hs_a", "hs_b")) / F.size(F.array_union("hs_a", "hs_b"))
-    return (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= 0.6)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return verify_jaccard(candidates, signed)
 
 
 @query(

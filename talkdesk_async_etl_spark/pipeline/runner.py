@@ -23,13 +23,12 @@ concurrency, one-Delta-commit-per-report.
 from __future__ import annotations
 
 import asyncio
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from talkdesk_async_etl_spark.pipeline.config import (
     PipelineConfig,
@@ -44,6 +43,14 @@ from talkdesk_async_etl_spark.pipeline.monitoring import (
 )
 from talkdesk_async_etl_spark.pipeline.retry import RetryPolicy
 from talkdesk_async_etl_spark.sources.http_source import ReportSource, fetch_report_csv
+
+# Every ReportResult field: the distributed profile's status rows carry
+# each result whole back to the driver. timestamp_ntz keeps utc_now()'s
+# naive values unshifted by the session time zone.
+_RESULT_SCHEMA = (
+    "report_name string, status string, rows_written int, output_path string,"
+    " error_message string, start_time timestamp_ntz, end_time timestamp_ntz"
+)
 
 # Reference DIST:39: ~100 reports per partition for connector fan-out.
 PARTITION_TARGET_SIZE = 100
@@ -61,7 +68,6 @@ class RunOutcome:
 
 
 async def _process_one(
-    spark: SparkSession | None,
     source: ReportSource,
     report_name: str,
     retries: int,
@@ -143,7 +149,7 @@ def run_pipeline(
         else:
             coros = [
                 _process_one(
-                    spark, source, r["report_name"], r["retries"], from_date, to_date,
+                    source, r["report_name"], r["retries"], from_date, to_date,
                     cfg.output_base_path,
                 )
                 for r in report_rows
@@ -185,42 +191,19 @@ def _run_distributed(
 
         async def handle(pdf: pd.DataFrame) -> pd.DataFrame:
             coros = [
-                _process_one(
-                    None, source, row.report_name, int(row.retries), from_date, to_date, out_base
-                )
+                _process_one(source, row.report_name, int(row.retries), from_date, to_date, out_base)
                 for row in pdf.itertuples()
             ]
             results = await _gather_bounded(coros)
-            return pd.DataFrame(
-                {
-                    "report_name": [r.report_name for r in results],
-                    "status": [r.status for r in results],
-                    "rows_written": [r.rows_written for r in results],
-                    "error_message": [r.error_message or "" for r in results],
-                }
-            )
+            return pd.DataFrame([asdict(r) for r in results])
 
         for pdf in batches:
             if len(pdf):
                 yield asyncio.run(handle(pdf))
 
-    status_df = (
+    rows = (
         plan.repartition(num_partitions)
-        .mapInPandas(
-            per_partition,
-            schema="report_name string, status string, rows_written int, error_message string",
-        )
+        .mapInPandas(per_partition, schema=_RESULT_SCHEMA)
+        .collect()  # status rows only — bounded by report count
     )
-    rows = status_df.collect()  # status rows only — bounded by report count
-    now = utc_now()
-    return [
-        ReportResult(
-            report_name=r["report_name"],
-            status=r["status"],
-            rows_written=r["rows_written"],
-            error_message=r["error_message"] or None,
-            start_time=now,
-            end_time=now,
-        )
-        for r in rows
-    ]
+    return [ReportResult(**r.asDict()) for r in rows]

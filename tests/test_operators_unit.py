@@ -242,14 +242,16 @@ def test_embedding_cosine_block_kernel_bitwise_equals_join_form(spark):
     frame with an orthogonal pair (dropped by both), a zero-norm vector
     under ANSI (both fail) and non-ANSI division (both drop the pair),
     a NaN-valued vector (NaN sim kept by both under Spark's
-    NaN-is-largest ``>=``) and an empty frame."""
+    NaN-is-largest ``>=``), an empty frame, and a NULL vector, a NULL
+    element and ragged lengths (the pairs they are in drop in both).
+    The kernel's broadcast matrix is released with the caller's scope."""
     import struct
 
     from talkdesk_async_etl_spark.operators.dedup import (
         _cosine_pairs_blocked,
         _cosine_pairs_joined,
     )
-    from talkdesk_async_etl_spark.plans.cache import cache_scope
+    from talkdesk_async_etl_spark.plans.cache import cache_scope, release_scoped
     from talkdesk_async_etl_spark.sources.io import read_table
 
     def canon(rows):
@@ -272,6 +274,9 @@ def test_embedding_cosine_block_kernel_bitwise_equals_join_form(spark):
         assert canon(_cosine_pairs_blocked(emb).collect()) == canon(
             _cosine_pairs_joined(emb).collect()
         )
+    with cache_scope():
+        _cosine_pairs_blocked(emb).collect()
+        assert release_scoped() == 1
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),   # ∥ to vec 1 → sim 1.0
         (1, [2.0, 0.0, 0.0, 0.0]),
@@ -324,6 +329,17 @@ def test_embedding_cosine_block_kernel_bitwise_equals_join_form(spark):
         b = _cosine_pairs_blocked(empty)
         assert b.collect() == j.collect() == []
     assert b.columns == j.columns
+    # Not one matrix: a NULL vector, a NULL element, ragged lengths.
+    for odd in (None, [None, 1.0], [1.0, 0.0, 0.0]):
+        frame = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [1.0, 0.1]), (2, odd)],
+            "vec_id long, v array<double>",
+        )
+        with cache_scope():
+            j = canon(_cosine_pairs_joined(frame).collect())
+            b = canon(_cosine_pairs_blocked(frame).collect())
+        assert [(x, y) for x, y, _ in j] == [(0, 1)], odd
+        assert b == j, odd
 
 
 def test_shingles_short_docs_yield_empty(spark):
@@ -560,6 +576,10 @@ def test_incremental_lsh_gates_old_old_pairs(spark):
         (1, base + " old_b", False),          # old near-dup of 0
         (2, base + " new_c", True),           # new near-dup of both
         (3, " ".join(f"z{i}" for i in range(40)), True),  # new, unrelated
+        # under 3 tokens: empty shingle sets, so the same all-max
+        # signature — an LSH candidate pair with an empty union
+        (4, "alpha", False),
+        (5, "beta gamma", True),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, is_new boolean")
     with cache_scope():
@@ -570,6 +590,7 @@ def test_incremental_lsh_gates_old_old_pairs(spark):
     assert (0, 1) not in got          # old x old gated out
     assert (0, 2) in got and (1, 2) in got  # new vs old both found
     assert all(3 not in p for p in got)     # unrelated new pairs nothing
+    assert (4, 5) not in got                # empty sets are not near-dups
 
 
 def test_pack_sequences_invariants(spark):
@@ -3759,12 +3780,16 @@ def test_pitch_autocorr_detects_generating_period(spark):
 def test_prefix_filter_join_completeness_and_pruning(spark, tmp_path):
     """Prefix filtering must (a) find EXACTLY the pairs the exhaustive
     join finds — including a pair exactly AT the 0.6 threshold — and
-    (b) generate strictly fewer candidates than all-pairs."""
+    (b) generate strictly fewer candidates than all-pairs. MinHash-LSH
+    verification must agree too, on docs shorter than 3 tokens as
+    well: their empty shingle sets share the all-max signature, so
+    they pair as LSH candidates with an empty union."""
     from pyspark.sql import functions as F
 
     from talkdesk_async_etl_spark.operators.dedup import (
         _bucket_pairs,
         _shingle_hashes,
+        dedup_minhash_lsh,
         dedup_near_jaccard,
         dedup_prefix_filter_join,
     )
@@ -3780,6 +3805,8 @@ def test_prefix_filter_join_completeness_and_pruning(spark, tmp_path):
         (4, " ".join(["a%02d" % i for i in range(14)] + ["b%02d" % i for i in range(6)]),
          "en", "web", 100),
         (5, " ".join(["u%02d" % i for i in range(20)]), "en", "web", 100),
+        (6, "alpha", "en", "web", 5),         # no shingles
+        (7, "beta gamma", "en", "web", 10),   # no shingles
     ]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars int"
@@ -3791,6 +3818,9 @@ def test_prefix_filter_join_completeness_and_pruning(spark, tmp_path):
           for r in dedup_prefix_filter_join(spark, str(tmp_path)).collect()}
     assert pf == exact and (1, 2) in {(a, b) for a, b, _ in pf}
     assert (3, 4) not in {(a, b) for a, b, _ in pf}
+    lsh = {(r["doc_a"], r["doc_b"], r["jaccard"])
+           for r in dedup_minhash_lsh(spark, str(tmp_path)).collect()}
+    assert lsh == exact
 
     # pruning: prefix candidates strictly fewer than exhaustive
     docs = read_table(spark, str(tmp_path), "documents").select(

@@ -118,6 +118,14 @@ def test_pipeline_distributed_profile(spark, tmp_path, fixture_dir):
     )
     assert out.status == "SUCCESS" and out.ok == 3
     assert {r.report_name for r in out.results} == set(REPORTS)
+    # Each result keeps its report's own timings and sink path, as in
+    # the driver-async profile.
+    for r in out.results:
+        assert r.start_time < r.end_time
+        assert r.output_path == os.path.join(
+            cfg.output_base_path, r.report_name, "2024-01-01_to_2024-01-02.csv"
+        )
+        assert os.path.exists(r.output_path)
 
 
 def test_retry_then_succeed_schedule(fixture_dir):
